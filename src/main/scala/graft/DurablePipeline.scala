@@ -224,26 +224,15 @@ final class DurablePipeline(
     // inserted twice, breaking the effectively-once invariant.
     val t0 = System.nanoTime()
     graft.streaming.VersionedStore.withStoreLock(storeDir.toString) {
-      val stored = Ingest.readStore(spark, storeDir.toString)
-      val fresh = Ingest.backfill(spark, stored, posts, control.conditions, profiles)
-        .persist()
-      try {
-        val perKey = fresh.groupBy("key").count().collect()
-          .map(r => r.getString(0) -> r.getLong(1)).toMap
-        val n = perKey.values.sum
-        if (n > 0)
-          fresh.write.mode("append").partitionBy("key")
-            .parquet(Ingest.versionDir(storeDir.toString))
-        // the reference's initial run stamps the conditions row too
-        // (subscription.ts:210,370-378): backfilled feeds get this run's
-        // wall time and their captured counts, so getQuery reports them
-        // without waiting for the next streaming cycle
-        val touched = control.conditions.filter(c => perKey.contains(c.key))
-        if (touched.nonEmpty)
-          metrics.record(touched, perKey,
-            math.max(1L, (System.nanoTime() - t0) / 1000000L))
-        n
-      } finally fresh.unpersist(blocking = false)
+      val conditions = control.conditions
+      val fresh = Ingest.backfill(spark, Ingest.readStore(spark, storeDir.toString),
+        posts, conditions, profiles)
+      // the reference's initial run stamps the conditions row too
+      // (subscription.ts:210,370-378): backfilled feeds get this run's
+      // wall time and their captured counts, so getQuery reports them
+      // without waiting for the next streaming cycle
+      Ingest.appendNew(storeDir.toString, fresh, t0, Some(metrics),
+        perKey => conditions.filter(c => perKey.contains(c.key)))()
     }
   }
 

@@ -70,8 +70,16 @@ object Auth {
 
   private val mapper = new ObjectMapper()
 
-  private def b64urlDecode(s: String): Array[Byte] =
-    java.util.Base64.getUrlDecoder.decode(s)
+  /** Strict unpadded base64url: the JDK decoder ignores the unused low
+    * bits of a final partial group (and accepts padding), so several
+    * strings decode to the same bytes. Only the one canonical encoding is
+    * accepted, so a token has exactly one valid spelling. */
+  private def b64urlDecode(s: String): Array[Byte] = {
+    val b = java.util.Base64.getUrlDecoder.decode(s)
+    if (b64urlEncode(b) != s)
+      throw new IllegalArgumentException("non-canonical base64url")
+    b
+  }
 
   def b64urlEncode(b: Array[Byte]): String =
     java.util.Base64.getUrlEncoder.withoutPadding.encodeToString(b)

@@ -116,6 +116,37 @@ object Ingest {
     Upsert.newRows(stored, candidates, Seq("uri", "key"))
   }
 
+  /** The one store append, shared by the stream sink and the search
+    * backfill: materialize `fresh` once, count it per feed, append it, run
+    * `afterAppend`, then record the cycle's wall time (since `t0`) and
+    * counts on `metrics` for the conditions `recordFor` picks from the
+    * per-feed counts.
+    * Caller holds the store lock. Returns the rows appended.
+    *
+    * The materialization is an eager `localCheckpoint`, never `persist()`:
+    * a cached plan over the store path would make the append refresh it,
+    * which lists the whole store a second time ([[graft.GraftSession]]).
+    * The checkpoint reads nothing from the store, and its partitions are
+    * the ones AQE coalesced, so a batch writes one file per feed it
+    * touches. Its RDD is freed once the append has landed. */
+  private[graft] def appendNew(storeDir: String, fresh: DataFrame, t0: Long,
+      metrics: Option[graft.model.ConditionMetrics],
+      recordFor: Map[String, Long] => Seq[Condition])(afterAppend: => Unit = ()): Long = {
+    val rows = fresh.localCheckpoint()
+    try {
+      val perKey = rows.groupBy("key").count().collect()
+        .map(r => r.getString(0) -> r.getLong(1)).toMap
+      val n = perKey.values.sum
+      if (n > 0) rows.write.mode("append").partitionBy("key").parquet(versionDir(storeDir))
+      afterAppend
+      metrics.foreach(_.record(recordFor(perKey), perKey,
+        math.max(1L, (System.nanoTime() - t0) / 1000000L)))
+      n
+    } finally rows.queryExecution.logical.collectFirst {
+      case r: org.apache.spark.sql.execution.LogicalRDD => r.rdd.unpersist(blocking = false)
+    }
+  }
+
   /** Start the streaming ingest: every micro-batch appends its surviving
     * new rows to the keyed store; with `retentionEvery` > 0 the count-based
     * cap (S11) runs after every Nth batch — the reference applies it every
@@ -142,22 +173,11 @@ object Ingest {
       val t0 = System.nanoTime()
       val conditions = conditionsFn()
       locked(storeDir) {
-        val stored = readStore(spark, storeDir)
-        val fresh = processBatch(spark, stored, batch, conditions, profiles)
-        val perKey = metrics.map { _ =>
-          // one extra tiny agg job, only when metrics are wanted; cached so
-          // the append below reuses the same computed rows
-          fresh.persist()
-          fresh.groupBy("key").count().collect()
-            .map(r => r.getString(0) -> r.getLong(1)).toMap
-        }
-        try {
-          fresh.write.mode("append").partitionBy("key").parquet(versionDir(storeDir))
+        val fresh = processBatch(spark, readStore(spark, storeDir), batch, conditions, profiles)
+        appendNew(storeDir, fresh, t0, metrics, _ => conditions) {
           if (retentionEvery > 0 && batchId % retentionEvery == 0)
             retentionCompactLocked(spark, storeDir, conditions)
-        } finally if (perKey.isDefined) fresh.unpersist()
-        metrics.foreach(_.record(conditions, perKey.getOrElse(Map.empty),
-          math.max(1L, (System.nanoTime() - t0) / 1000000L)))
+        }
       }
     }
     stream.writeStream

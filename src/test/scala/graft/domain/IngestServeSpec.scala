@@ -72,6 +72,82 @@ class IngestServeSpec extends SparkSpec {
     assert(served.nonEmpty)
   }
 
+  test("a micro-batch over a store of more than 32 feeds lists it on the driver and caches nothing") {
+    val s = spark
+    import s.implicits._
+    implicit val sq = spark.sqlContext
+    val store = tmpDir("graft-wide-store")
+    val ckpt = tmpDir("graft-wide-ckpt")
+    // every fixture match lands in all 40 feeds: 40 key= dirs, above
+    // Spark's default parallel-listing threshold of 32
+    val conditions = (0 until 40).map(i => cond(key = f"w$i%02d"))
+    val stream = MemoryStream[PostView]
+    val metrics = new ConditionMetrics
+    val q = Ingest.start(spark, stream.toDF(), conditions,
+      Some(profiles.toDF()), store, ckpt, metrics = Some(metrics))
+    // the batch that creates the feed dirs reads an empty store
+    stream.addData(posts.take(5))
+    q.processAllAvailable()
+    def perFeed(): Map[String, Long] = Ingest.readStore(spark, store)
+      .groupBy("key").count().collect().map(r => r.getString(0) -> r.getLong(1)).toMap
+    def files(): Map[String, Int] = new java.io.File(store).listFiles()
+      .filter(_.getName.startsWith("key=")).map(d =>
+        d.getName.stripPrefix("key=") -> d.list().count(_.endsWith(".parquet"))).toMap
+    assert(perFeed().size == 40)
+
+    val streamJobs = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val marker = s"marker-${q.id}"
+    val markerSeen = new java.util.concurrent.CountDownLatch(1)
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        Option(e.properties).foreach { p =>
+          val desc = Option(p.getProperty("spark.job.description")).getOrElse("")
+          if (p.getProperty("sql.streaming.queryId") == q.id.toString) streamJobs.add(desc)
+          if (desc == marker) markerSeen.countDown()
+        }
+    }
+    spark.sparkContext.addSparkListener(listener)
+    spark.catalog.clearCache()
+    try {
+      // batch 1 redelivers posts 4-5; batch 2 redelivers post 1
+      for (batch <- Seq(posts.slice(3, 9), posts.drop(9) :+ posts.head)) {
+        val rddsBefore = spark.sparkContext.getPersistentRDDs.keySet
+        val (storedBefore, recordedBefore, filesBefore) =
+          (perFeed(), conditions.map(c => c.key -> metrics.recordCount(c.key).getOrElse(0L)).toMap,
+            files())
+        stream.addData(batch)
+        q.processAllAvailable()
+        assert(spark.sharedState.cacheManager.isEmpty, "a batch left a cached plan behind")
+        assert((spark.sparkContext.getPersistentRDDs.keySet -- rddsBefore).isEmpty,
+          "a batch left a persisted RDD behind")
+        val storedAfter = perFeed()
+        conditions.foreach { c =>
+          assert(metrics.recordCount(c.key).getOrElse(0L) - recordedBefore(c.key) ==
+            storedAfter.getOrElse(c.key, 0L) - storedBefore.getOrElse(c.key, 0L), c.key)
+        }
+        // the new rows were written from one coalesced checkpoint partition
+        val filesAfter = files()
+        assert(filesAfter.forall { case (k, n) => n - filesBefore.getOrElse(k, 0) <= 1 },
+          s"more than one new file in a feed: $filesBefore -> $filesAfter")
+      }
+      q.stop()
+      // listener events arrive asynchronously but in order: once a job
+      // started after the batches is seen, every batch job has been
+      spark.sparkContext.setJobDescription(marker)
+      try spark.sparkContext.parallelize(Seq(1)).count()
+      finally spark.sparkContext.setJobDescription(null)
+      assert(markerSeen.await(60, java.util.concurrent.TimeUnit.SECONDS))
+      assert(streamJobs.size > 0, "the listener saw none of the stream's jobs")
+      val listings = streamJobs.toArray.map(_.toString).filter(_.startsWith("Listing leaf files"))
+      assert(listings.isEmpty, s"a batch ran a listing job: ${listings.mkString("; ")}")
+    } finally spark.sparkContext.removeSparkListener(listener)
+
+    val all = Ingest.readStore(spark, store)
+    assert(all.filter(col("uri") === "at://a/1").count() == 40L,
+      "the redelivered post must land once per feed")
+    assert(all.select("uri", "key").distinct().count() == all.count())
+  }
+
   test("initial backfill honors initPost, skips non-empty feeds, idempotent (T2)") {
     val s = spark
     import s.implicits._

@@ -221,7 +221,7 @@ class DidResolverSpec extends AnyFunSuite {
         }
       assert(got == requester)
       // tampered token still rejects with the network-resolved key
-      val bad = token.dropRight(2) + "AA"
+      val bad = TamperedToken(token)
       val err = intercept[Auth.AuthError](
         Auth.validateAuth(Some(s"Bearer $bad"), service, resolver, Auth.Es256kVerifier))
       assert(err.status == 401)

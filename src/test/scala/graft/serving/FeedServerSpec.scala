@@ -105,7 +105,7 @@ class FeedServerSpec extends SparkSpec {
       val (st2, p2) = get(port, path, Some(good))
       assert(st2 == 200 && p2.get("feed").size() > 0, p2.toString)
       // tampered signature → 401
-      val (st3, _) = get(port, path, Some(good.dropRight(2) + "xx"))
+      val (st3, _) = get(port, path, Some(TamperedToken(good)))
       assert(st3 == 401)
       // expired token → 401
       val expired = Auth.signHs256("did:plc:alice", cfg.serviceDid,

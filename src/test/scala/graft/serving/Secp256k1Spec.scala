@@ -65,7 +65,7 @@ class Secp256k1Spec extends AnyFunSuite {
       resolver, Auth.DefaultVerifier) == "did:plc:alice")
 
     // tampered signature → 401
-    val tampered = token.dropRight(3) + "abc"
+    val tampered = TamperedToken(token)
     val e1 = intercept[Auth.AuthError](Auth.validateAuth(Some(s"Bearer $tampered"),
       "did:web:feeds.example.com", resolver, Auth.Es256kVerifier))
     assert(e1.status == 401)
@@ -102,6 +102,26 @@ class Secp256k1Spec extends AnyFunSuite {
     val legit = Auth.signHs256("did:plc:bob", "did:web:feeds.example.com", exp, secret)
     assert(Auth.validateAuth(Some(s"Bearer $legit"), "did:web:feeds.example.com",
       hsResolver, Auth.DefaultVerifier) == "did:plc:bob")
+  }
+
+  test("a signature spelled in non-canonical base64url is rejected") {
+    val secret = "shared".getBytes("UTF-8")
+    val resolver = Auth.StaticKeyResolver(Map("did:plc:alice" -> secret))
+    val token = Auth.signHs256("did:plc:alice", "did:web:feeds.example.com",
+      System.currentTimeMillis() / 1000 + 600, secret)
+    assert(Auth.validateAuth(Some(s"Bearer $token"), "did:web:feeds.example.com",
+      resolver, Auth.Hs256Verifier) == "did:plc:alice")
+    // a 32-byte HMAC is 43 characters; the last one carries 4 data bits
+    // and 2 unused ones. Setting an unused bit spells the same bytes.
+    val alphabet = "ABCDEFGHIJKLMNOPQRSTUVWXYZabcdefghijklmnopqrstuvwxyz0123456789-_"
+    val last = alphabet(alphabet.indexOf(token.last.toInt) | 1)
+    val respelled = token.dropRight(1) + last
+    val sig = (t: String) => java.util.Base64.getUrlDecoder.decode(t.split('.')(2)).toSeq
+    assert(respelled != token && sig(respelled) == sig(token),
+      "the JDK decoder ignores the unused bits")
+    val e = intercept[Auth.AuthError](Auth.validateAuth(Some(s"Bearer $respelled"),
+      "did:web:feeds.example.com", resolver, Auth.Hs256Verifier))
+    assert(e.status == 401)
   }
 
   test("a token without exp is rejected (nothing lives forever)") {

@@ -2,7 +2,7 @@ package graft.sources
 
 import graft.SparkSpec
 
-import java.util.concurrent.ConcurrentLinkedQueue
+import java.util.concurrent.{ConcurrentLinkedQueue, CountDownLatch}
 import java.util.concurrent.atomic.AtomicLong
 
 /** End-to-end wire test: a real RFC 6455 handshake + binary frames from
@@ -20,14 +20,15 @@ class SubscribeReposSpec extends SparkSpec {
   // cores, and a starved callback thread once pushed a 10-frame session
   // past 20s — the wait only binds on failure or a heavily-loaded box
   private def runClient(stub: SubscribeReposStub, cursorEvery: Int,
-      maxWaitMs: Long = 120000): (Seq[Array[Byte]], AtomicLong, SubscribeReposClient) = {
-    val received = new ConcurrentLinkedQueue[Array[Byte]]()
+      maxWaitMs: Long = 120000, received: CountDownLatch = new CountDownLatch(0))
+      : (Seq[Array[Byte]], AtomicLong, SubscribeReposClient) = {
+    val frames = new ConcurrentLinkedQueue[Array[Byte]]()
     val cursor = new AtomicLong(-1L)
     val client = new SubscribeReposClient(
       service = s"ws://127.0.0.1:${stub.port}",
       getCursor = () => Option(cursor.get()).filter(_ >= 0),
       updateCursor = cursor.set,
-      onFrame = received.add(_),
+      onFrame = { f => frames.add(f); received.countDown() },
       cursorEvery = cursorEvery)
     // short idle watchdog: the JDK WebSocket has been observed to swallow
     // an abrupt EOF entirely (no onError, no onClose) — the watchdog turns
@@ -35,8 +36,8 @@ class SubscribeReposSpec extends SparkSpec {
     client.start(reconnectDelayMs = 100, maxRestarts = 3, idleTimeoutMs = 5000)
     assert(client.awaitStopped(maxWaitMs),
       s"client did not finish in time: restarts=${client.restarts} " +
-        s"error=${client.error} frames=${received.size} connections=${stub.connections}")
-    (received.toArray(Array.empty[Array[Byte]]).toSeq, cursor, client)
+        s"error=${client.error} frames=${frames.size} connections=${stub.connections}")
+    (frames.toArray(Array.empty[Array[Byte]]).toSeq, cursor, client)
   }
 
   test("subscribes, receives real CBOR frames over a real websocket, stores the cursor") {
@@ -61,9 +62,11 @@ class SubscribeReposSpec extends SparkSpec {
   test("mid-stream TCP drop: reconnects with ?cursor=N and resumes; ingest stays exactly-once") {
     val frames = (1L to 10L).map(i => i -> commitFrame(i))
     // first connection dies abruptly after 4 frames (cursor stored at 4)
-    val stub = new SubscribeReposStub(frames, dropFirstConnectionAfter = Some(4))
+    val got4 = new CountDownLatch(4)
+    val stub = new SubscribeReposStub(frames, dropFirstConnectionAfter = Some(4),
+      dropWhenReceived = Some(got4))
     try {
-      val (received, cursor, client) = runClient(stub, cursorEvery = 2)
+      val (received, cursor, client) = runClient(stub, cursorEvery = 2, received = got4)
       assert(client.restarts == 1, s"expected exactly one reconnect, got ${client.restarts}")
       assert(cursor.get() == 10L)
       // second dial carried the resume cursor the first connection stored
@@ -108,9 +111,13 @@ class SubscribeReposSpec extends SparkSpec {
   test("cursor cadence replays the uncommitted tail after a drop; dedup absorbs it") {
     val frames = (1L to 10L).map(i => i -> commitFrame(i))
     // drop after 5 frames with cursor cadence 2 → cursor stuck at 4, frame 5 replays
-    val stub = new SubscribeReposStub(frames, dropFirstConnectionAfter = Some(5))
+    // the drop fires once the client has all 5: an earlier drop can lose
+    // frame 5 in flight, and then it arrives only once
+    val got5 = new CountDownLatch(5)
+    val stub = new SubscribeReposStub(frames, dropFirstConnectionAfter = Some(5),
+      dropWhenReceived = Some(got5))
     try {
-      val (received, _, client) = runClient(stub, cursorEvery = 2)
+      val (received, _, client) = runClient(stub, cursorEvery = 2, received = got5)
       assert(client.restarts == 1)
       assert(stub.connections.reverse == List(None, Some(4L)))
       assert(received.size == 11) // 5 + replayed 5..10: frame 5 arrives twice

@@ -13,11 +13,15 @@ import java.util.Base64
   * frames with seq > cursor. The first connection can be told to DROP the
   * TCP socket after `dropAfter` frames — no close frame, the way a flaky
   * upstream dies — so reconnect + cursor resume is testable end-to-end.
+  * An abrupt close can discard frames still in flight, so with
+  * `dropWhenReceived` the drop waits until the client counts that latch
+  * down, once per frame it has received.
   * Server frames are unmasked binary (opcode 0x2) per the RFC; a clean
   * end sends close (0x8, status 1000).
   */
 final class SubscribeReposStub(frames: Seq[(Long, Array[Byte])],
     dropFirstConnectionAfter: Option[Int] = None,
+    dropWhenReceived: Option[java.util.concurrent.CountDownLatch] = None,
     stallFirstConnection: Boolean = false) {
 
   private val server = new ServerSocket(0, 8, java.net.InetAddress.getLoopbackAddress)
@@ -79,6 +83,7 @@ final class SubscribeReposStub(frames: Seq[(Long, Array[Byte])],
       toServe.take(limit).foreach { case (_, bytes) => writeBinary(out, bytes) }
 
       if (isFirst && dropFirstConnectionAfter.isDefined) {
+        dropWhenReceived.foreach(_.await(60, java.util.concurrent.TimeUnit.SECONDS))
         s.close() // abrupt TCP drop, no close frame
       } else {
         out.write(Array[Byte](0x88.toByte, 0x02, 0x03, 0xE8.toByte)) // close, 1000
