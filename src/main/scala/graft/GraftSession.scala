@@ -34,6 +34,21 @@ import org.apache.spark.sql.SparkSession
   * the append refreshes every cached plan that reads the path, and the
   * refresh lists the whole store again
   * ([[graft.streaming.Ingest.appendNew]] checkpoints instead).
+  *
+  * The `file:` scheme is named here, for both Hadoop APIs
+  * (`fs.file.impl` for `FileSystem`, `fs.AbstractFileSystem.file.impl`
+  * for `FileContext`): [[graft.streaming.ForkFreeLocalFileSystem]] and
+  * [[graft.streaming.ForkFreeLocalFs]], Hadoop's checksummed local
+  * filesystem with `chmod` and `readlink` answered in the JVM. Without
+  * libhadoop the stock one forks a `chmod` for every file and directory
+  * it creates and a `readlink` for both paths of every `FileContext`
+  * rename. One 15 s `feed` run of perfbench on a 4-core VM started about
+  * 2 200 of them, 35 from the stream thread and 30-110 from the write
+  * task in each live batch, each a fork-and-wait. Hadoop caches one
+  * `FileSystem` per scheme, authority and user, not per class, so the
+  * session must be built before anything in the JVM asks Hadoop for a
+  * `file:` filesystem with a stock configuration; `ForkFreeLocalFsSpec`
+  * checks that the shared test JVM resolves to the fork-free class.
   */
 object GraftSession {
   def local(threads: Int = 32, shufflePartitions: Int = 32): SparkSession = {
@@ -52,6 +67,10 @@ object GraftSession {
       .config("spark.sql.adaptive.skewJoin.enabled", "true")
       .config("spark.sql.autoBroadcastJoinThreshold", (64 * 1024 * 1024).toString)
       .config("spark.sql.sources.parallelPartitionDiscovery.threshold", Int.MaxValue.toString)
+      .config("spark.hadoop.fs.file.impl",
+        classOf[graft.streaming.ForkFreeLocalFileSystem].getName)
+      .config("spark.hadoop.fs.AbstractFileSystem.file.impl",
+        classOf[graft.streaming.ForkFreeLocalFs].getName)
       .config("spark.driver.host", "127.0.0.1")
     withMaster(b0, s"local[$threads]").getOrCreate()
   }

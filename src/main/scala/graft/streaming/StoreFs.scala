@@ -17,6 +17,12 @@ import org.apache.hadoop.fs.permission.FsPermission
   * like every Spark read/write beside it, so local harness runs and specs
   * exercise the IDENTICAL code path (Hadoop's local FS) that HDFS takes.
   *
+  * Its conf is its own, not the session's: a plain `Configuration` (so
+  * every other scheme resolves as `core-site.xml` says) that maps `file:`
+  * to the raw [[ForkFreeRawLocalFs]] — no `.crc` sidecars on control
+  * files, and no `chmod` or `readlink` child process per create, mkdir
+  * or rename, so a pointer flip or a version swap forks nothing.
+  *
   * Atomicity contract, by backend:
   *   - HDFS: `rename` (both flavors used here — no-overwrite for version
   *     and epoch-partition commits, OVERWRITE for the `_current` pointer
@@ -38,13 +44,12 @@ private[graft] object StoreFs {
   // are driver-side control-plane ops (tiny pointer files, directory
   // renames), never data-plane reads — so the default resolver is right
   // and nothing here needs the SparkSession's per-job hadoop conf.
-  // `file:` resolves to RawLocalFs, not the checksummed LocalFs: control
-  // files (version pointer, lease) must not grow `.crc` sidecars — a
-  // POSIX rename of the pointer would leave the sidecar stale and fail
-  // every subsequent checksummed read.
+  // `file:` resolves to a raw form, not a checksummed one: control files
+  // (version pointer, lease) must not grow `.crc` sidecars — a POSIX
+  // rename of the pointer would leave the sidecar stale and fail every
+  // subsequent checksummed read.
   private val conf = new Configuration()
-  conf.set("fs.AbstractFileSystem.file.impl",
-    "org.apache.hadoop.fs.local.RawLocalFs")
+  conf.set("fs.AbstractFileSystem.file.impl", classOf[ForkFreeRawLocalFs].getName)
 
   private def fc(p: Path): FileContext = {
     val uri = p.toUri
