@@ -128,7 +128,15 @@ object Ingest {
     * which lists the whole store a second time ([[graft.GraftSession]]).
     * The checkpoint reads nothing from the store, and its partitions are
     * the ones AQE coalesced, so a batch writes one file per feed it
-    * touches. Its RDD is freed once the append has landed. */
+    * touches. Its RDD is freed once the append has landed.
+    *
+    * The append writes no `_SUCCESS` marker. The committer would otherwise
+    * rewrite `_SUCCESS` and its `._SUCCESS.crc` in the store root on every
+    * batch, and truncating a non-empty file to write it again waits on the
+    * disk's flush on ext4 ([[graft.DurablePipeline]]'s class doc). Nothing
+    * reads the marker: Spark's listing skips `_`-prefixed names, and
+    * [[swapStore]]'s legacy matcher still sweeps the markers older appends
+    * left. */
   private[graft] def appendNew(storeDir: String, fresh: DataFrame, t0: Long,
       metrics: Option[graft.model.ConditionMetrics],
       recordFor: Map[String, Long] => Seq[Condition])(afterAppend: => Unit = ()): Long = {
@@ -137,7 +145,9 @@ object Ingest {
       val perKey = rows.groupBy("key").count().collect()
         .map(r => r.getString(0) -> r.getLong(1)).toMap
       val n = perKey.values.sum
-      if (n > 0) rows.write.mode("append").partitionBy("key").parquet(versionDir(storeDir))
+      if (n > 0) rows.write.mode("append")
+        .option("mapreduce.fileoutputcommitter.marksuccessfuljobs", "false")
+        .partitionBy("key").parquet(versionDir(storeDir))
       afterAppend
       metrics.foreach(_.record(recordFor(perKey), perKey,
         math.max(1L, (System.nanoTime() - t0) / 1000000L)))

@@ -238,6 +238,104 @@ class DurablePipelineSpec extends SparkSpec {
     } finally { p.stop(); stub.stop() }
   }
 
+  test("the ingest path only creates files: nothing under the data dir is overwritten") {
+    // Renaming over an existing name or truncating and rewriting a file
+    // waits on the disk's flush (ext4 auto_da_alloc), so no file between
+    // the socket and the store may be replaced: every path, once seen,
+    // keeps its inode, size and mtime until it is deleted. The one
+    // exemption is the cycle manifest, a pointer whose atomic replace is
+    // its contract (CycleManifest, off the drain's thread).
+    val dir = Files.createTempDirectory("graft-nooverwrite")
+    val all = (1L to 9L).map(i => i -> WireFixtures.commitFrame(i, s"spark create-only $i"))
+    val conditions = Seq(Fixtures.cond(key = "co", inputRegex = "spark"))
+    val cfg = FeedServer.Config("did:web:co.example.com", "co.example.com", "did:plc:pub")
+    val exempt = Set("store/_graft_cycles")
+    val seen = scala.collection.mutable.Map.empty[String, Seq[Any]]
+    val rewritten = scala.collection.mutable.ArrayBuffer.empty[String]
+    def record(step: String): Unit = {
+      val files = Files.walk(dir)
+      try {
+        import scala.jdk.CollectionConverters._
+        files.iterator().asScala.filter(Files.isRegularFile(_)).foreach { f =>
+          val rel = dir.relativize(f).toString
+          val a = Files.readAttributes(f, "unix:ino,size,lastModifiedTime").asScala
+          val stat = Seq(a("ino"), a("size"), a("lastModifiedTime"))
+          if (!exempt(rel) && seen.get(rel).exists(_ != stat))
+            rewritten += s"$step: $rel ${seen(rel)} -> $stat"
+          seen(rel) = stat
+        }
+      } finally files.close()
+    }
+    // three incarnations over one data dir, each dialing with the last
+    // one's cursor: 3 cursor writes and one stream batch apiece
+    (1 to 3).foreach { step =>
+      val stub = new SubscribeReposStub(all.take(3 * step))
+      val p = new DurablePipeline(spark, conditions, cfg,
+        s"ws://127.0.0.1:${stub.port}", dir.toString, cursorEvery = 1, retentionEvery = 0)
+      try {
+        p.start(reconnectDelayMs = 100, maxRestarts = 3, idleTimeoutMs = 5000)
+        assert(p.client.awaitStopped(120000), s"step $step: subscription did not finish")
+        assert(p.storedCursor == 3L * step)
+        record(s"step $step cursor writes")
+        p.query.processAllAvailable()
+        assert(p.flushCycleManifest())
+        assert(p.storedRows == 3L * step)
+        record(s"step $step stream batch")
+      } finally { p.stop(); stub.stop() }
+    }
+    assert(rewritten.isEmpty, rewritten.mkString("files rewritten in place:\n", "\n", ""))
+  }
+
+  test("a legacy single cursor file resumes the redial and is gone after the first new write") {
+    val dir = Files.createTempDirectory("graft-legacycursor")
+    Files.write(dir.resolve("cursor"), "4".getBytes("UTF-8"))
+    val all = (1L to 6L).map(i => i -> WireFixtures.commitFrame(i, s"spark legacy $i"))
+    val conditions = Seq(Fixtures.cond(key = "lg", inputRegex = "spark"))
+    val cfg = FeedServer.Config("did:web:lg.example.com", "lg.example.com", "did:plc:pub")
+    val stub = new SubscribeReposStub(all)
+    val p = new DurablePipeline(spark, conditions, cfg,
+      s"ws://127.0.0.1:${stub.port}", dir.toString, cursorEvery = 1)
+    try {
+      assert(p.storedCursor == 4L)
+      p.start(reconnectDelayMs = 100, maxRestarts = 3, idleTimeoutMs = 5000)
+      assert(p.client.awaitStopped(120000))
+      assert(stub.connections.last.contains(4L), "the first dial must carry the legacy cursor")
+      assert(!Files.exists(dir.resolve("cursor")), "the legacy cursor must go with the first new write")
+      assert(p.storedCursor == 6L)
+      p.query.processAllAvailable()
+      assert(p.storedRows == 2L, "only the frames after the legacy cursor are new")
+    } finally { p.stop(); stub.stop() }
+  }
+
+  test("an empty or mismatched newest cursor file is skipped for the previous one") {
+    val dir = Files.createTempDirectory("graft-badcursor")
+    val all = (1L to 10L).map(i => i -> WireFixtures.commitFrame(i, s"spark badcursor $i"))
+    val conditions = Seq(Fixtures.cond(key = "bc", inputRegex = "spark"))
+    val cfg = FeedServer.Config("did:web:bc.example.com", "bc.example.com", "did:plc:pub")
+    // each phase: frames 1..upTo upstream; the newest cursor file is then
+    // damaged, so the next phase must redial from the one before it
+    def phase(upTo: Int, expectDial: Option[Long], damage: Option[String]): Unit = {
+      val stub = new SubscribeReposStub(all.take(upTo))
+      val p = new DurablePipeline(spark, conditions, cfg,
+        s"ws://127.0.0.1:${stub.port}", dir.toString, cursorEvery = 2)
+      try {
+        p.start(reconnectDelayMs = 100, maxRestarts = 3, idleTimeoutMs = 5000)
+        assert(p.client.awaitStopped(120000))
+        assert(stub.connections.last == expectDial, s"phase $upTo dialed ${stub.connections}")
+        assert(p.storedCursor == upTo.toLong)
+        p.flushSpool()
+        p.query.processAllAvailable()
+        val store = Ingest.readStore(spark, s"$dir/store")
+        assert(store.count() == upTo.toLong, s"phase $upTo: lost or duplicated rows")
+        assert(store.select("uri").distinct().count() == upTo.toLong, s"phase $upTo: duplicated rows")
+      } finally { p.stop(); stub.stop() }
+      damage.foreach(d => Files.write(dir.resolve(s"cursor-$upTo"), d.getBytes("UTF-8")))
+    }
+    phase(6, None, damage = Some(""))    // cursor-6 empty: back to 4
+    phase(8, Some(4L), damage = Some("99")) // cursor-8 names another seq: back to 6
+    phase(10, Some(6L), damage = None)
+  }
+
   test("cursor file survives a torn write; spool files publish atomically") {
     val dir = Files.createTempDirectory("graft-durable2").toString
     val conditions = Seq(Fixtures.cond(key = "dur2", inputRegex = "spark"))
