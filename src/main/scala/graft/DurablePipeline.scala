@@ -49,13 +49,15 @@ import graft.streaming.Ingest
   * kill-and-restart, including the no-manual-flush crash window.
   *
   * CURSOR FILE FORMAT: `<dataDir>/cursor-<seq>`, holding `seq` in decimal.
-  * A write puts it in `cursor-<seq>.tmp`, renames that to the new name,
-  * then deletes all but the newest two `cursor-<seq>` files, any tmp a
-  * kill left behind, and the single `cursor` file of the older format. A
-  * read takes the highest seq whose file holds that same seq, so an empty
-  * or damaged newest file falls back to the one before it (an older
-  * cursor only means more replay); with no valid `cursor-<seq>` file it
-  * reads the older format's `cursor`.
+  * A write creates `cursor-<seq>` and writes it in place, then keeps that
+  * file and the newest one below it: it deletes the older ones, any higher
+  * one (only a kill's partial write can be higher, as a complete one would
+  * have been the redial point) and the single `cursor` file of the older
+  * format. A read takes the highest seq whose file holds that same seq.
+  * A partial write, empty or a prefix of the digits, never does, so it
+  * falls back to the file before it (an older cursor only means more
+  * replay); with no valid `cursor-<seq>` file the read takes the older
+  * format's `cursor`.
   *
   * NO FILE ON THE INTAKE PATH IS OVERWRITTEN. On ext4 (default
   * `auto_da_alloc`), renaming over an existing name, or truncating a
@@ -71,7 +73,7 @@ import graft.streaming.Ingest
   * ([[streaming.Ingest.appendNew]]).
   *
   * DURABILITY CONTRACT: process-kill safe. A kill at any point leaves each
-  * cursor file absent, a tmp, or complete, and the persisted cursor never
+  * cursor file absent, partial (skipped by the read), or complete, and the persisted cursor never
   * runs ahead of the flushed spool. Nothing is fsync'd, so surviving a
   * power loss or an OS crash is not claimed.
   */
@@ -96,13 +98,13 @@ final class DurablePipeline(
 
   // ---- cursor: a new file per write, never an overwrite (format and
   // reasons in the class doc)
-  private val CursorName = """cursor-(\d+)(\.tmp)?""".r
+  private val CursorName = """cursor-(\d+)""".r
 
-  /** Every `cursor-<seq>[.tmp]` file: (seq, is a tmp, path). */
-  private def cursorFiles(): List[(Long, Boolean, Path)] = {
+  /** Every `cursor-<seq>` file: (seq, path). */
+  private def cursorFiles(): List[(Long, Path)] = {
     val names = Files.list(root)
     try names.iterator().asScala.flatMap(p => p.getFileName.toString match {
-      case CursorName(seq, tmp) => Some((seq.toLong, tmp != null, p))
+      case CursorName(seq) => Some((seq.toLong, p))
       case _ => None
     }).toList
     finally names.close()
@@ -115,16 +117,14 @@ final class DurablePipeline(
     * file is skipped for the one before it); a data dir from before this
     * format resumes from its single `cursor` file. */
   private def readCursor(): Option[Long] =
-    cursorFiles().filterNot(_._2).sortBy(-_._1).collectFirst {
-      case (seq, _, p) if readLong(p).contains(seq) => seq
+    cursorFiles().sortBy(-_._1).collectFirst {
+      case (seq, p) if readLong(p).contains(seq) => seq
     }.orElse(readLong(legacyCursorPath))
 
   private def writeCursor(seq: Long): Unit = {
-    val tmp = root.resolve(s"cursor-$seq.tmp")
-    Files.write(tmp, seq.toString.getBytes(StandardCharsets.UTF_8))
-    Files.move(tmp, root.resolve(s"cursor-$seq"), StandardCopyOption.ATOMIC_MOVE)
-    val (tmps, finals) = cursorFiles().partition(_._2)
-    ((finals.sortBy(-_._1).drop(2) ++ tmps).map(_._3) :+ legacyCursorPath)
+    Files.write(root.resolve(s"cursor-$seq"), seq.toString.getBytes(StandardCharsets.UTF_8))
+    val (higher, lower) = cursorFiles().filter(_._1 != seq).partition(_._1 > seq)
+    ((higher ++ lower.sortBy(-_._1).drop(1)).map(_._2) :+ legacyCursorPath)
       .foreach(Files.deleteIfExists)
   }
 

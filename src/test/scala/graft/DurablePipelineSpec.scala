@@ -342,17 +342,22 @@ class DurablePipelineSpec extends SparkSpec {
     val cfg = FeedServer.Config("did:web:d2.example.com", "d2.example.com", "did:plc:pub")
     val stub = new SubscribeReposStub((1L to 3L).map(i =>
       i -> WireFixtures.commitFrame(i, s"spark atomic $i")))
+    // a kill mid-write leaves a cursor file holding a prefix of its seq:
+    // it never shadows the cursor, and the next write removes it
+    val torn = java.nio.file.Paths.get(dir, "cursor-999")
+    java.nio.file.Files.write(torn, "99".getBytes)
     val p = new DurablePipeline(spark, conditions, cfg,
       s"ws://127.0.0.1:${stub.port}", dir, cursorEvery = 1)
     try {
+      assert(p.storedCursor == -1L)
       p.start(reconnectDelayMs = 100, maxRestarts = 3, idleTimeoutMs = 5000)
       assert(p.client.awaitStopped(120000))
+      assert(stub.connections.head.isEmpty, "the first dial must carry no cursor")
       assert(p.storedCursor == 3L)
-      // a leftover temp file (a kill mid-write) never shadows the cursor,
-      // and the spool dir only ever contains complete .txt files
-      java.nio.file.Files.write(java.nio.file.Paths.get(dir, "cursor.tmp"),
-        "999".getBytes)
+      assert(!java.nio.file.Files.exists(torn), "the next cursor write must remove the torn file")
+      java.nio.file.Files.write(torn, "".getBytes)
       assert(p.storedCursor == 3L)
+      // the spool dir only ever contains complete .txt files
       p.flushSpool()
       val spooled = java.nio.file.Files.list(java.nio.file.Paths.get(dir, "spool"))
       try {

@@ -9,17 +9,17 @@ not. When the disk's flush is slow, the first two cost milliseconds each and
 the third stays in microseconds. The ingest path creates only new files, so
 only the third kind sits on it.
 
-    python3 tools/flush_probe.py [DIR] [--rounds 3] [--ops 30]
+    python3 tools/flush_probe.py [DIR]
 
 DIR defaults to the current directory; the probe works in a fresh temporary
-subdirectory of it and removes that afterwards. Prints one line per round
-and operation (ms/op), then one JSON line with each operation's median over
-the rounds.
+subdirectory of it and removes that afterwards. It runs 3 rounds of 30
+operations each, printing one line per round and operation (ms/op), then
+one JSON line with each operation's median over the rounds.
 """
-import argparse
 import json
 import os
 import statistics
+import sys
 import tempfile
 import time
 
@@ -58,21 +58,19 @@ def rename_new(d, n):
     return time.perf_counter() - t0
 
 
-OPS = [("rename_over_ms", rename_over), ("truncate_rewrite_ms", truncate_rewrite),
-       ("rename_new_ms", rename_new)]
+ROUNDS = 3
+OPS = 30
+PROBES = [("rename_over_ms", rename_over), ("truncate_rewrite_ms", truncate_rewrite),
+          ("rename_new_ms", rename_new)]
 
 
 def main():
-    ap = argparse.ArgumentParser(description=__doc__.split("\n\n")[0])
-    ap.add_argument("dir", nargs="?", default=".")
-    ap.add_argument("--rounds", type=int, default=3)
-    ap.add_argument("--ops", type=int, default=30)
-    a = ap.parse_args()
-    per_op = {name: [] for name, _ in OPS}
-    for r in range(a.rounds):
-        for name, fn in OPS:
-            with tempfile.TemporaryDirectory(prefix="flush_probe.", dir=a.dir) as d:
-                ms = fn(d, a.ops) * 1000.0 / a.ops
+    base = sys.argv[1] if len(sys.argv) > 1 else "."
+    per_op = {name: [] for name, _ in PROBES}
+    for r in range(ROUNDS):
+        for name, fn in PROBES:
+            with tempfile.TemporaryDirectory(prefix="flush_probe.", dir=base) as d:
+                ms = fn(d, OPS) * 1000.0 / OPS
             per_op[name].append(ms)
             print(f"round {r + 1} {name} {ms:.3f}")
     print(json.dumps({name: round(statistics.median(v), 3) for name, v in per_op.items()}))
