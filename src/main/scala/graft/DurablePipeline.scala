@@ -271,13 +271,13 @@ final class DurablePipeline(
     val t0 = System.nanoTime()
     graft.streaming.VersionedStore.withStoreLock(storeDir.toString) {
       val conditions = control.conditions
-      val fresh = Ingest.backfill(spark, Ingest.readStore(spark, storeDir.toString),
-        posts, conditions, profiles)
+      val candidates = Ingest.backfillCandidates(spark,
+        Ingest.readStore(spark, storeDir.toString), posts, conditions, profiles)
       // the reference's initial run stamps the conditions row too
       // (subscription.ts:210,370-378): backfilled feeds get this run's
       // wall time and their captured counts, so getQuery reports them
       // without waiting for the next streaming cycle
-      Ingest.appendNew(storeDir.toString, fresh, t0, Some(metrics),
+      Ingest.appendNew(storeDir.toString, candidates, t0, Some(metrics),
         perKey => conditions.filter(c => perKey.contains(c.key)))()
     }
   }

@@ -740,12 +740,26 @@ object ScaleSmoke {
           graft.operators.FilterCascade.fanOut(p,
             graft.operators.FilterCascade.conditionsDf(spark, cs), None).count()
         },
+        "feed_fanout_mixed_w1000" -> { p =>
+          // a MIXED set, both kinds of every-post condition next to the
+          // screened ones: every 100th feed's include is unscreenable
+          // (a \p class stands the extractor down), and one extra feed's
+          // needle is in every post, so the density gate demotes it.
+          // Both ride the indexed pass as every-post ordinals; the posts
+          // are scanned once
+          val cs = standingConditions(1000).map(c =>
+            if (c.key.stripPrefix("feed").toInt % 100 == 0)
+              c.copy(inputRegex = s"\\p{L}${c.inputRegex.drop(1)}")
+            else c) :+ standingConditions(1).head.copy(key = "feedall",
+              recordName = "feedall", inputRegex = "topic")
+          graft.operators.FilterCascade.fanOutScreened(spark, p, cs, None).count()
+        },
         "feed_fanout_realistic_w1000" -> { p =>
           // the coverage question: REAL-WORLD regex shapes (optional
           // plurals, grouped tails, classes, anchors, emoji branches,
           // quoted phrases) riding the indexed screen — ALL 13 template
           // families extract (emoji via caseless-safe needles, \Q…\E via
-          // quote resolution), so nothing rides the crossJoin branch
+          // quote resolution), so no condition takes the every-post path
           graft.operators.FilterCascade.fanOutScreened(spark, p,
             realisticConditions(1000), None).count()
         },

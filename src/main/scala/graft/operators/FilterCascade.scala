@@ -650,13 +650,18 @@ object FilterCascade {
 
   /** [[fanOut]] with the include screen applied PER PARTITION of the
     * condition set, not all-or-nothing: conditions whose include regex
-    * yields required literals fan out over the screened post stream;
-    * the (typically few) unscreenable ones fan out over the full stream,
-    * and the two result sets union. One unscreenable condition then
-    * costs ONE extra full-stream branch instead of silently disabling
-    * the screen for the other 999 — the mixed standing-query set a real
-    * deployment has. Row-equivalence with the unscreened fan-out is
-    * spec-pinned (FilterCascadeSpec).
+    * yields required literals are candidates only for the posts holding
+    * one of their needles; the (typically few) unscreenable ones are
+    * candidates for every post. Both kinds ride ONE inverted-index pass
+    * ([[fanOutIndexed]]): the unscreenable conditions take fixed
+    * ordinals that every post's candidate list carries, so the posts are
+    * scanned (and, on the firehose, CBOR-decoded) once. One unscreenable
+    * condition then costs one candidate pair per post instead of
+    * silently disabling the screen for the other 999 — the mixed
+    * standing-query set a real deployment has. A set with no screenable
+    * condition is the plain crossJoin [[fanOut]], also one scan.
+    * Row-equivalence with the unscreened fan-out is spec-pinned
+    * (FilterCascadeSpec).
     *
     * CANDIDATE-DENSITY GATE (r17): a condition whose needle is
     * ultra-common (a universal literal — the misconfigured-feed regime)
@@ -669,7 +674,7 @@ object FilterCascade {
     * memoized JVM-wide by condition-set identity so steady-state drains
     * pay nothing) and DEMOTES conditions above
     * `spark.graft.fanout.densityGateThreshold` (default 0.5) to the
-    * full-stream crossJoin branch the mixed-set split already has.
+    * every-post ordinals the unscreenable conditions already have.
     * A set first sighted on a drain too small to judge arms LATER from
     * accumulator counters the indexed scan itself feeds — no per-drain
     * re-probe, no source re-execution ([[densityDemoted]]).
@@ -685,16 +690,11 @@ object FilterCascade {
       screenable0.map { case (c, lits) => (c, lits.get) })
     val (demoted, screenable) =
       screenable0.partition(p => demotedKeys.contains(p._1.key))
-    val rest = rest0 ++ demoted
     if (screenable.isEmpty)
       fanOut(posts, conditionsDf(spark, cs), profiles)
-    else {
-      val screened = fanOutIndexed(spark, posts,
-        screenable.map { case (c, lits) => (c, lits.get) }, profiles, probe)
-      if (rest.isEmpty) screened
-      else screened.unionByName(
-        fanOut(posts, conditionsDf(spark, rest.map(_._1)), profiles))
-    }
+    else fanOutIndexed(spark, posts,
+      screenable.map { case (c, lits) => (c, lits.get) },
+      (rest0 ++ demoted).map(_._1), profiles, probe)
   }
 
   /** JVM-wide memo for the density gate's probe verdicts: standing-query
@@ -822,25 +822,27 @@ object FilterCascade {
   }
 
 
-  /** The INVERTED-INDEX fan-out for a fully screenable condition set:
-    * one [[org.apache.spark.sql.graft.MatchedConditionsFolded]] scan per
+  /** The INVERTED-INDEX fan-out: one
+    * [[org.apache.spark.sql.graft.MatchedConditionsFolded]] scan per
     * post emits the ordinals of the conditions whose required literal
-    * the post contains; the explode + broadcast-HASH-join on that
-    * ordinal then evaluates the full cascade predicate only for the
-    * CANDIDATE pairs. Total work is |posts| + |candidate pairs| in every
-    * match regime — the crossJoin form pays |posts| × width even when a
-    * post can only ever match a handful of feeds (SCALE.md fanout
-    * section: dense width-1000 race 1.1 s vs 9.9 s). Still a superset
-    * funnel: a needle hit only ADMITS a pair to the predicate.
+    * the post contains, followed by the ordinals of the `unscreened`
+    * conditions, which every post carries; the explode +
+    * broadcast-HASH-join on that ordinal then evaluates the full cascade
+    * predicate only for the CANDIDATE pairs. Total work is |posts| +
+    * |candidate pairs| in every match regime — the crossJoin form pays
+    * |posts| × width even when a post can only ever match a handful of
+    * feeds (SCALE.md fanout section: dense width-1000 race 1.1 s vs
+    * 9.9 s). Still a superset funnel: a needle hit only ADMITS a pair to
+    * the predicate.
     *
     * `probe` (bootstrap window only) rides the scan as the density
     * gate's arming side-output — see [[densityDemoted]]. */
   private def fanOutIndexed(spark: org.apache.spark.sql.SparkSession,
       posts: DataFrame, condLits: Seq[(Condition, Seq[String])],
-      profiles: Option[DataFrame],
-      probe: Option[org.apache.spark.sql.graft.DensityProbe] = None): DataFrame = {
+      unscreened: Seq[Condition], profiles: Option[DataFrame],
+      probe: Option[org.apache.spark.sql.graft.DensityProbe]): DataFrame = {
     import spark.implicits._
-    val cs = condLits.map(_._1)
+    val cs = condLits.map(_._1) ++ unscreened
     val needleTags = condLits.zipWithIndex.flatMap { case ((_, lits), i) =>
       lits.map(n => (n, i))
     }.distinct
@@ -860,7 +862,7 @@ object FilterCascade {
     val candidates = withProfileText(
       posts.withColumn("__cidx", explode(
         org.apache.spark.sql.graft.MatchedConditionsFolded(
-          folded, needleTags, cs.size, probe)))
+          folded, needleTags, condLits.size, probe, unscreened.size)))
         .join(broadcast(condIdx), "__cidx"),
       profiles)
     cascadeFinish(candidates)

@@ -7,34 +7,44 @@ import org.apache.spark.sql.functions._
   * NOTHING and catch-up membership test
   * (/root/reference/src/subscription.ts:273-278,362-366) as anti-joins.
   *
-  * Scale notes: the anti-join shuffles only on the key columns and
-  * broadcast-converts automatically when the incoming batch is small (the
-  * common ingest shape: small delta vs large stored table — Spark picks the
-  * stored side as streamed, delta as broadcast/build). Order-insensitive
-  * superset of the reference's sequential early-exit.
+  * Scale notes: the anti-join shuffles only on the key columns, and
+  * broadcast-converts when the STORED side is small: a left anti join can
+  * only build its right side, so the incoming delta is always the streamed
+  * side and the stored keys are the broadcast (`BroadcastHashJoin LeftAnti
+  * BuildRight`). The live ingest therefore reads only the stored feeds a
+  * batch touches ([[graft.streaming.Ingest.appendNew]]), which keeps that
+  * build side the size of those feeds, not of the store.
+  * Order-insensitive superset of the reference's sequential early-exit.
   */
 object Upsert {
 
-  /** Rows of `incoming` whose key is absent from `existing` (J2/P12).
-    * Duplicates WITHIN the batch collapse too (one row per key,
-    * deterministic min-by-row pick) — the reference's row-at-a-time PK
-    * conflict-ignore keeps only the first arrival; a set-oriented batch
-    * needs an explicit in-batch dedup or replays would double-insert.
+  /** One row per key of `incoming`, the deterministic min-by-row pick —
+    * the reference's row-at-a-time PK conflict-ignore keeps only the
+    * first arrival; a set-oriented batch needs an explicit in-batch dedup
+    * or replays would double-insert.
     *
-    * The in-batch dedup is `min(struct(all columns))` per key — the same
-    * row a `row_number over (partition by key order by struct)` window
-    * picks (struct MIN and struct ORDER BY share one ordering), but as a
+    * The pick is `min(struct(all columns))` per key — the same row a
+    * `row_number over (partition by key order by struct)` window picks
+    * (struct MIN and struct ORDER BY share one ordering), but as a
     * partially-aggregated groupBy: the shuffle moves one candidate row per
     * key per map partition and nothing is sorted, where the window form
     * shuffles and sorts the entire batch. */
-  def newRows(existing: DataFrame, incoming: DataFrame, keys: Seq[String]): DataFrame = {
+  def collapse(incoming: DataFrame, keys: Seq[String]): DataFrame = {
     val cols = incoming.columns
     incoming
       .groupBy(keys.map(col): _*)
       .agg(min(struct(cols.map(col): _*)).as("__r"))
       .select(cols.map(c => col(s"__r.$c")): _*)
-      .join(existing.select(keys.map(col): _*), keys, "left_anti")
   }
+
+  /** Rows of `incoming` whose key is absent from `existing` (J2/P12).
+    * Duplicates WITHIN the batch collapse too ([[collapse]]). */
+  def newRows(existing: DataFrame, incoming: DataFrame, keys: Seq[String]): DataFrame =
+    absent(existing, collapse(incoming, keys), keys)
+
+  /** The anti-join alone, for an `incoming` already one row per key. */
+  def absent(existing: DataFrame, incoming: DataFrame, keys: Seq[String]): DataFrame =
+    incoming.join(existing.select(keys.map(col): _*), keys, "left_anti")
 
   /** Idempotent append: existing ∪ (incoming ∖ existing-by-key) (S8/T8). */
   def upsert(existing: DataFrame, incoming: DataFrame, keys: Seq[String]): DataFrame =
@@ -44,7 +54,7 @@ object Upsert {
     * existing rows, insert unmatched incoming rows — the reference's
     * UPDATE-SET-WHERE + insert (S12, /root/reference/src/subscription.ts:
     * 161-168,373-400) as one set operation. Incoming duplicates collapse
-    * to the deterministic min-struct row first (same rule as [[newRows]]).
+    * to the deterministic min-struct row first ([[collapse]]).
     *
     * One anti-join plus one union: existing rows whose key has an incoming
     * replacement simply drop out, so there is no wide full-outer COALESCE
@@ -52,11 +62,7 @@ object Upsert {
     * THEN UPDATE WHEN NOT MATCHED THEN INSERT; on a parquet store it is
     * the rewrite-and-swap batch job. */
   def merge(existing: DataFrame, incoming: DataFrame, keys: Seq[String]): DataFrame = {
-    val cols = incoming.columns
-    val deduped = incoming
-      .groupBy(keys.map(col): _*)
-      .agg(min(struct(cols.map(col): _*)).as("__r"))
-      .select(cols.map(c => col(s"__r.$c")): _*)
+    val deduped = collapse(incoming, keys)
     existing.join(deduped.select(keys.map(col): _*), keys, "left_anti")
       .unionByName(deduped)
   }

@@ -4,6 +4,7 @@ import graft.model.{Condition, Post}
 import graft.operators.{FilterCascade, Upsert}
 import org.apache.spark.sql.{DataFrame, Dataset, Encoders, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.{CountKeys, KeyCountAccumulator}
 import org.apache.spark.sql.streaming.StreamingQuery
 
 /** The ingest plane: micro-batched PostView stream → filter-cascade fan-out
@@ -78,33 +79,33 @@ object Ingest {
     else emptyStore(spark)
   }
 
-  /** ONE feed's slice of the store, resolved through the same pointer —
-    * for the serving plane's per-feed work (head-block builds, page
-    * fallbacks), where [[readStore]]'s whole-root file listing is the
-    * dominant cost: a head rebuild only needs `key=<feed>`'s files, but
-    * a fresh whole-store read lists EVERY feed's directory plus every
-    * straggler append file first (measured on the two-JVM replica
-    * sitting: ~1.6 s per build over 1000 feeds + 358 drain appends,
-    * vs ~milliseconds for the one-directory listing — and the gap
-    * widens linearly with feed count). `basePath` keeps the partition
-    * column, so the frame is plan-compatible with the whole-store read;
-    * a feed with no rows yet reads as the empty store. */
-  def readStoreKey(spark: SparkSession, storeDir: String, key: String): DataFrame = {
+  /** The slice of the store holding `keys`, resolved through the same
+    * pointer: only their `key=` directories are listed and read. The
+    * serving plane reads one feed this way (head-block builds, page
+    * fallbacks), and the live ingest dedups a batch against the feeds it
+    * touches ([[appendNew]]); a whole-store read lists EVERY feed's
+    * directory plus every straggler append file first (measured on the
+    * two-JVM replica sitting: ~1.6 s per build over 1000 feeds + 358
+    * drain appends, vs ~milliseconds for the one-directory listing — and
+    * the gap widens linearly with feed count).
+    *
+    * One one-level listing of the version dir decides which of `keys`
+    * have a directory; a key without one contributes nothing, and with
+    * none the slice is the empty store. A LEGACY unpartitioned store has
+    * no `key=` dirs at all, so its whole read is the only correct one.
+    * `basePath` keeps the partition column, so the frame is
+    * plan-compatible with the whole-store read. */
+  def readStoreKey(spark: SparkSession, storeDir: String, keys: String*): DataFrame = {
     val vd = versionDir(storeDir)
-    val part = new org.apache.hadoop.fs.Path(vd,
-      "key=" + org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
-        .escapePathName(key)).toString
-    if (StoreFs.listNames(StoreFs.path(part)).nonEmpty)
-      spark.read.option("basePath", vd).schema(postSchema).parquet(part)
-    else {
-      // distinguish "feed has no rows" (key-partitioned layout, empty
-      // slice) from a LEGACY unpartitioned store, where key= dirs never
-      // exist and the whole-store read is the only correct one — one
-      // non-recursive namespace listing, paid only on this miss path
-      val names = StoreFs.listNames(StoreFs.path(vd))
-      if (names.isEmpty || names.exists(_.startsWith("key="))) emptyStore(spark)
-      else readStore(spark, storeDir)
-    }
+    val names = StoreFs.listNames(StoreFs.path(vd)).toSet
+    val dirs = keys.distinct.map(k => "key=" +
+      org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils.escapePathName(k))
+      .filter(names.contains)
+    if (dirs.nonEmpty)
+      spark.read.option("basePath", vd).schema(postSchema)
+        .parquet(dirs.map(d => new org.apache.hadoop.fs.Path(vd, d).toString): _*)
+    else if (names.isEmpty || names.exists(_.startsWith("key="))) emptyStore(spark)
+    else spark.read.schema(postSchema).parquet(vd)
   }
 
   /** One micro-batch: cascade fan-out then dedup against the store.
@@ -117,18 +118,29 @@ object Ingest {
   }
 
   /** The one store append, shared by the stream sink and the search
-    * backfill: materialize `fresh` once, count it per feed, append it, run
-    * `afterAppend`, then record the cycle's wall time (since `t0`) and
+    * backfill: dedup `candidates` against the store, append what is new,
+    * run `afterAppend`, then record the cycle's wall time (since `t0`) and
     * counts on `metrics` for the conditions `recordFor` picks from the
     * per-feed counts.
     * Caller holds the store lock. Returns the rows appended.
     *
-    * The materialization is an eager `localCheckpoint`, never `persist()`:
-    * a cached plan over the store path would make the append refresh it,
+    * Its work follows the batch, not the store. Two SQL executions:
+    *  1. an eager `localCheckpoint` of the candidates, one row per
+    *     (uri, key) ([[Upsert.collapse]]), whose result tasks also collect
+    *     the feed keys the batch touches ([[CountKeys]]);
+    *  2. the anti-join against only those feeds' `key=` dirs
+    *     ([[readStoreKey]]: a key with no dir yet reads nothing), written
+    *     straight into the store; the write's result tasks count the rows
+    *     per feed, so no separate count job runs.
+    * A batch with no candidates writes nothing.
+    *
+    * The materialization is a `localCheckpoint`, never `persist()`: a
+    * cached plan over the store path would make the append refresh it,
     * which lists the whole store a second time ([[graft.GraftSession]]).
-    * The checkpoint reads nothing from the store, and its partitions are
-    * the ones AQE coalesced, so a batch writes one file per feed it
-    * touches. Its RDD is freed once the append has landed.
+    * The checkpoint reads nothing from the store, its blocks stay on the
+    * executors, and its partitions are the ones AQE coalesced, so a batch
+    * writes one file per feed it touches. Its RDD is freed once the
+    * append has landed.
     *
     * The append writes no `_SUCCESS` marker. The committer would otherwise
     * rewrite `_SUCCESS` and its `._SUCCESS.crc` in the store root on every
@@ -137,21 +149,32 @@ object Ingest {
     * reads the marker: Spark's listing skips `_`-prefixed names, and
     * [[swapStore]]'s legacy matcher still sweeps the markers older appends
     * left. */
-  private[graft] def appendNew(storeDir: String, fresh: DataFrame, t0: Long,
+  private[graft] def appendNew(storeDir: String, candidates: DataFrame, t0: Long,
       metrics: Option[graft.model.ConditionMetrics],
       recordFor: Map[String, Long] => Seq[Condition])(afterAppend: => Unit = ()): Long = {
-    val rows = fresh.localCheckpoint()
+    val spark = candidates.sparkSession
+    val uriKey = Seq("uri", "key")
+    def counted(df: DataFrame) = {
+      val acc = KeyCountAccumulator.register(spark.sparkContext)
+      (df.select(df.columns.map(c =>
+        if (c == "key") CountKeys(col(c), acc).as(c) else col(c)): _*), acc)
+    }
+    val (collapsed, touched) = counted(Upsert.collapse(candidates, uriKey))
+    val rows = collapsed.localCheckpoint()
     try {
-      val perKey = rows.groupBy("key").count().collect()
-        .map(r => r.getString(0) -> r.getLong(1)).toMap
-      val n = perKey.values.sum
-      if (n > 0) rows.write.mode("append")
-        .option("mapreduce.fileoutputcommitter.marksuccessfuljobs", "false")
-        .partitionBy("key").parquet(versionDir(storeDir))
+      val keys = touched.value.keys.toSeq
+      val perKey = if (keys.isEmpty) Map.empty[String, Long] else {
+        val (fresh, landed) = counted(Upsert.absent(
+          readStoreKey(spark, storeDir, keys: _*), rows, uriKey))
+        fresh.write.mode("append")
+          .option("mapreduce.fileoutputcommitter.marksuccessfuljobs", "false")
+          .partitionBy("key").parquet(versionDir(storeDir))
+        landed.value
+      }
       afterAppend
       metrics.foreach(_.record(recordFor(perKey), perKey,
         math.max(1L, (System.nanoTime() - t0) / 1000000L)))
-      n
+      perKey.values.sum
     } finally rows.queryExecution.logical.collectFirst {
       case r: org.apache.spark.sql.execution.LogicalRDD => r.rdd.unpersist(blocking = false)
     }
@@ -173,7 +196,12 @@ object Ingest {
   /** [[start]] with a LIVE condition supplier, re-read at every
     * micro-batch — the reference's reload loop re-selects the whole
     * conditions table each cycle (subscription.ts:133-137), so an admin
-    * CRUD takes effect on the NEXT cycle without a restart. */
+    * CRUD takes effect on the NEXT cycle without a restart.
+    *
+    * A batch scans its frames once (the cascade's one inverted-index pass,
+    * [[FilterCascade.fanOutScreened]]) and lands through [[appendNew]]:
+    * two SQL executions, and the store files it reads are those of the
+    * feeds its candidates touch. */
   def startDynamic(spark: SparkSession, stream: DataFrame,
       conditionsFn: () => Seq[Condition],
       profiles: Option[DataFrame], storeDir: String, checkpointDir: String,
@@ -183,8 +211,8 @@ object Ingest {
       val t0 = System.nanoTime()
       val conditions = conditionsFn()
       locked(storeDir) {
-        val fresh = processBatch(spark, readStore(spark, storeDir), batch, conditions, profiles)
-        appendNew(storeDir, fresh, t0, metrics, _ => conditions) {
+        appendNew(storeDir, FilterCascade.fanOutScreened(spark, batch, conditions, profiles),
+            t0, metrics, _ => conditions) {
           if (retentionEvery > 0 && batchId % retentionEvery == 0)
             retentionCompactLocked(spark, storeDir, conditions)
         }
@@ -234,7 +262,15 @@ object Ingest {
     * at scale that is one shuffle keyed by feed over one search page
     * budget of posts, not a store scan. */
   def backfill(spark: SparkSession, stored: DataFrame, searchPosts: DataFrame,
-      conditions: Seq[Condition], profiles: Option[DataFrame]): DataFrame = {
+      conditions: Seq[Condition], profiles: Option[DataFrame]): DataFrame =
+    Upsert.newRows(stored,
+      backfillCandidates(spark, stored, searchPosts, conditions, profiles), Seq("uri", "key"))
+
+  /** [[backfill]]'s capped cascade matches, before the dedup against the
+    * store — what [[appendNew]] takes. */
+  private[graft] def backfillCandidates(spark: SparkSession, stored: DataFrame,
+      searchPosts: DataFrame, conditions: Seq[Condition],
+      profiles: Option[DataFrame]): DataFrame = {
     import spark.implicits._
     // which feeds already have rows: bounded by the number of feeds
     val have = stored.select("key").distinct().collect().map(_.getString(0)).toSet
@@ -245,11 +281,10 @@ object Ingest {
     val rn = row_number().over(
       org.apache.spark.sql.expressions.Window.partitionBy(col("key"))
         .orderBy(col("indexedAt").desc, col("cid").desc))
-    val capped = candidates.join(broadcast(limits), Seq("key"))
+    candidates.join(broadcast(limits), Seq("key"))
       .withColumn("__rn", rn)
       .filter(col("__rn") <= col("__limit"))
       .select(candidates.columns.map(col): _*)
-    Upsert.newRows(stored, capped, Seq("uri", "key"))
   }
 
   /** Delete every stored post of one feed key — the engine side of the

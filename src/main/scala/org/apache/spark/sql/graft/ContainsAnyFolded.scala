@@ -72,14 +72,20 @@ object ContainsAnyFolded {
   * through the accumulator channel — no extra job, no source
   * re-execution, and correct across executor JVMs. Task retries and
   * speculation can re-count rows, but rows and hits inflate together, so
-  * the density RATIO the gate reads stays unbiased. */
+  * the density RATIO the gate reads stays unbiased.
+  *
+  * `always` ordinals, `nTags` until `nTags + always`, follow the matched
+  * ones on EVERY row: the conditions no needle can screen, which the
+  * fan-out still evaluates for every post. They ride the same explode
+  * and join, so the posts are scanned once whatever the mix. The probe
+  * counts only the needle hits. */
 case class MatchedConditionsFolded(child: Expression,
     needles: Seq[String], tags: Seq[Int], nTags: Int,
-    probe: Option[DensityProbe] = None)
+    probe: Option[DensityProbe] = None, always: Int = 0)
     extends UnaryExpression with ExpectsInputTypes {
 
-  require(needles.nonEmpty && needles.length == tags.length && nTags > 0,
-    "needles/tags must align and nTags must be positive")
+  require(needles.nonEmpty && needles.length == tags.length && nTags > 0 &&
+    always >= 0, "needles/tags must align, nTags must be positive")
 
   override def inputTypes: Seq[AbstractDataType] = Seq(StringType)
   override def dataType: org.apache.spark.sql.types.DataType =
@@ -91,8 +97,14 @@ case class MatchedConditionsFolded(child: Expression,
     AhoCorasick.tagged(needles.zip(tags), nTags)
 
   def matched(t: UTF8String): org.apache.spark.sql.catalyst.util.ArrayData = {
-    val out = automaton.matchedTags(t.toString)
-    probe.foreach(_.record(out))
+    val hits = automaton.matchedTags(t.toString)
+    probe.foreach(_.record(hits))
+    val out = if (always == 0) hits else {
+      val o = java.util.Arrays.copyOf(hits, hits.length + always)
+      var k = 0
+      while (k < always) { o(hits.length + k) = nTags + k; k += 1 }
+      o
+    }
     org.apache.spark.sql.catalyst.expressions.UnsafeArrayData
       .fromPrimitiveArray(out)
   }
@@ -110,14 +122,11 @@ case class MatchedConditionsFolded(child: Expression,
 }
 
 object MatchedConditionsFolded {
-  def apply(text: Column, needleTags: Seq[(String, Int)], nTags: Int): Column =
-    apply(text, needleTags, nTags, None)
-
   def apply(text: Column, needleTags: Seq[(String, Int)], nTags: Int,
-      probe: Option[DensityProbe]): Column =
+      probe: Option[DensityProbe], always: Int): Column =
     ExpressionUtils.column(MatchedConditionsFolded(
       ExpressionUtils.expression(text),
-      needleTags.map(_._1), needleTags.map(_._2), nTags, probe))
+      needleTags.map(_._1), needleTags.map(_._2), nTags, probe, always))
 }
 
 /** The density gate's arming side-output (see

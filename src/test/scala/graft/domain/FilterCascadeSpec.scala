@@ -274,6 +274,42 @@ class FilterCascadeSpec extends SparkSpec {
       Seq(cs.last), Some(profilesDf))) == plain.filter(_._1 == "dup"))
   }
 
+  test("fanOutScreened scans the posts once for screened, unscreenable and demoted conditions") {
+    val s = spark
+    import s.implicits._
+    // 600 posts (past the gate's 256-row minimum) from an RDD, so the scan
+    // is a leaf of its own in the executed plan
+    val local = (0 until 600).map { i =>
+      Fixtures.pv(s"at://one/$i", s"c$i",
+        if (i % 50 == 0) s"ubiqtok scarcetok post $i" else s"ubiqtok post $i",
+        "2024-03-01T10:00:00.000Z", labels = if (i % 7 == 0) Some(Nil) else None)
+    }.toDF()
+    val posts = spark.createDataFrame(local.rdd, local.schema)
+    // a UNIQUE condition set (the gate memo is keyed by set identity)
+    val cs = Seq(
+      cond(key = "onebroad", inputRegex = "ubiqtok"), // universal: demoted
+      cond(key = "onenarrow", inputRegex = "scarcetok"), // screened
+      cond(key = "oneunscr", inputRegex = "\\p{L}+ scarcetok"), // unscreenable
+      cond(key = "oneprof", inputRegex = "scarcetok",
+        profileMatch = Some(ProfileMatch("scarcetok", "engineer"))))
+    // the set fanOutScreened hands the gate: every condition but oneunscr
+    val parsed = cs.flatMap(c => FilterCascade.requiredLiterals(c.inputRegex).map(c -> _))
+    assert(parsed.map(_._1.key) == Seq("onebroad", "onenarrow", "oneprof"))
+    assert(FilterCascade.densityDemoted(spark, posts, parsed)._1 == Set("onebroad"))
+    def rows(df: DataFrame) = df.select("key", "uri").collect()
+      .map(r => (r.getString(0), r.getString(1))).toSet
+    val screened = FilterCascade.fanOutScreened(spark, posts, cs, Some(profilesDf))
+    val plain = rows(FilterCascade.fanOut(posts,
+      FilterCascade.conditionsDf(spark, cs), Some(profilesDf)))
+    assert(rows(screened) == plain)
+    assert(Seq("onebroad", "onenarrow", "oneunscr", "oneprof")
+      .forall(k => plain.exists(_._1 == k)), "fixture regression: every kind produces rows")
+    val helper = new org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper {}
+    val scans = helper.collectLeaves(screened.queryExecution.executedPlan)
+      .filter(_.isInstanceOf[org.apache.spark.sql.execution.RDDScanExec])
+    assert(scans.size == 1, s"posts scanned ${scans.size} times")
+  }
+
   test("density gate demotes ultra-common needles and preserves row-equivalence") {
     val s = spark
     import s.implicits._
@@ -291,7 +327,7 @@ class FilterCascadeSpec extends SparkSpec {
       c -> FilterCascade.requiredLiterals(c.inputRegex).get)
     val (demoted, probe0) = FilterCascade.densityDemoted(spark, posts, parsed)
     assert(demoted == Set("broad"),
-      s"the universal-literal condition must demote to the crossJoin branch: $demoted")
+      s"the universal-literal condition must demote to the every-post path: $demoted")
     assert(probe0.isEmpty, "a judgeable first drain arms immediately — no probe")
     // the demotion is a pure plan-routing decision: outputs stay identical
     def rows(df: org.apache.spark.sql.DataFrame) =

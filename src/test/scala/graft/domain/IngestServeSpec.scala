@@ -79,8 +79,13 @@ class IngestServeSpec extends SparkSpec {
     val store = tmpDir("graft-wide-store")
     val ckpt = tmpDir("graft-wide-ckpt")
     // every fixture match lands in all 40 feeds: 40 key= dirs, above
-    // Spark's default parallel-listing threshold of 32
-    val conditions = (0 until 40).map(i => cond(key = f"w$i%02d"))
+    // Spark's default parallel-listing threshold of 32. w00 and w01 also
+    // match "quasar", which only the last batch's post carries, so that
+    // batch touches 2 of the 40 feeds
+    val conditions = (0 until 40).map(i => cond(key = f"w$i%02d",
+      inputRegex = if (i < 2) "spark|vector|quasar" else "spark|vector"))
+    val touched = Set("w00", "w01")
+    val quasar = pv("at://q/1", "cq1", "quasar sighting", "2024-03-01T11:00:00.000Z")
     val stream = MemoryStream[PostView]
     val metrics = new ConditionMetrics
     val q = Ingest.start(spark, stream.toDF(), conditions,
@@ -95,28 +100,56 @@ class IngestServeSpec extends SparkSpec {
         d.getName.stripPrefix("key=") -> d.list().count(_.endsWith(".parquet"))).toMap
     assert(perFeed().size == 40)
 
-    val streamJobs = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    // (description, SQL execution id) of every stream job
+    val streamJobs = new java.util.concurrent.ConcurrentLinkedQueue[(String, String)]()
+    // parquet scans' "number of files read" metric ids, and the driver
+    // metric updates (execution id, metric id, value) that carry them
+    val fileMetrics = java.util.concurrent.ConcurrentHashMap.newKeySet[Long]()
+    val driverUpdates = new java.util.concurrent.ConcurrentLinkedQueue[(Long, Long, Long)]()
     val marker = s"marker-${q.id}"
     val markerSeen = new java.util.concurrent.CountDownLatch(1)
+    import org.apache.spark.sql.execution.SparkPlanInfo
+    import org.apache.spark.sql.execution.ui._
+    def scans(info: SparkPlanInfo): Unit = {
+      if (info.nodeName.startsWith("Scan parquet"))
+        info.metrics.filter(_.name == "number of files read")
+          .foreach(m => fileMetrics.add(m.accumulatorId))
+      info.children.foreach(scans)
+    }
     val listener = new org.apache.spark.scheduler.SparkListener {
       override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
         Option(e.properties).foreach { p =>
           val desc = Option(p.getProperty("spark.job.description")).getOrElse("")
-          if (p.getProperty("sql.streaming.queryId") == q.id.toString) streamJobs.add(desc)
+          if (p.getProperty("sql.streaming.queryId") == q.id.toString)
+            streamJobs.add((desc, p.getProperty("spark.sql.execution.id")))
           if (desc == marker) markerSeen.countDown()
         }
+      override def onOtherEvent(e: org.apache.spark.scheduler.SparkListenerEvent): Unit = e match {
+        case s: SparkListenerSQLExecutionStart => scans(s.sparkPlanInfo)
+        case u: SparkListenerSQLAdaptiveExecutionUpdate => scans(u.sparkPlanInfo)
+        case d: SparkListenerDriverAccumUpdates =>
+          d.accumUpdates.foreach { case (id, v) => driverUpdates.add((d.executionId, id, v)) }
+        case _ =>
+      }
     }
+    var twoFeedBatch = -1L
+    var touchedFiles = 0
     spark.sparkContext.addSparkListener(listener)
     spark.catalog.clearCache()
     try {
-      // batch 1 redelivers posts 4-5; batch 2 redelivers post 1
-      for (batch <- Seq(posts.slice(3, 9), posts.drop(9) :+ posts.head)) {
+      // batch 1 redelivers posts 4-5; batch 2 redelivers post 1; batch 3
+      // touches w00 and w01 only
+      for (batch <- Seq(posts.slice(3, 9), posts.drop(9) :+ posts.head, Seq(quasar))) {
         val rddsBefore = spark.sparkContext.getPersistentRDDs.keySet
         val (storedBefore, recordedBefore, filesBefore) =
           (perFeed(), conditions.map(c => c.key -> metrics.recordCount(c.key).getOrElse(0L)).toMap,
             files())
         stream.addData(batch)
         q.processAllAvailable()
+        if (batch == Seq(quasar)) {
+          twoFeedBatch = q.lastProgress.batchId
+          touchedFiles = touched.toSeq.map(filesBefore).sum
+        }
         assert(spark.sharedState.cacheManager.isEmpty, "a batch left a cached plan behind")
         assert((spark.sparkContext.getPersistentRDDs.keySet -- rddsBefore).isEmpty,
           "a batch left a persisted RDD behind")
@@ -138,14 +171,63 @@ class IngestServeSpec extends SparkSpec {
       finally spark.sparkContext.setJobDescription(null)
       assert(markerSeen.await(60, java.util.concurrent.TimeUnit.SECONDS))
       assert(streamJobs.size > 0, "the listener saw none of the stream's jobs")
-      val listings = streamJobs.toArray.map(_.toString).filter(_.startsWith("Listing leaf files"))
+      import scala.jdk.CollectionConverters._
+      val jobs = streamJobs.asScala.toSeq
+      val listings = jobs.map(_._1).filter(_.startsWith("Listing leaf files"))
       assert(listings.isEmpty, s"a batch ran a listing job: ${listings.mkString("; ")}")
+      // the 2-feed batch's work follows the batch: its jobs run in at most
+      // two SQL executions, and its parquet scans open only files of the
+      // two touched key= dirs
+      val execs = jobs.filter(_._1.linesIterator.contains(s"batch = $twoFeedBatch"))
+        .flatMap(j => Option(j._2)).map(_.toLong).toSet
+      assert(execs.nonEmpty, s"no job seen for batch $twoFeedBatch")
+      assert(execs.size <= 2, s"batch $twoFeedBatch ran ${execs.size} SQL executions")
+      val filesRead = driverUpdates.asScala.toSeq
+        .collect { case (e, id, v) if execs(e) && fileMetrics.contains(id) => v }.sum
+      assert(touchedFiles > 0 && filesRead > 0, "the dedup must read the touched feeds")
+      assert(filesRead <= touchedFiles,
+        s"batch $twoFeedBatch read $filesRead store files; the touched feeds hold $touchedFiles")
     } finally spark.sparkContext.removeSparkListener(listener)
 
     val all = Ingest.readStore(spark, store)
     assert(all.filter(col("uri") === "at://a/1").count() == 40L,
       "the redelivered post must land once per feed")
     assert(all.select("uri", "key").distinct().count() == all.count())
+  }
+
+  test("the append dedups against the touched feeds only: redelivery, a first post, a legacy store") {
+    val s = spark
+    import s.implicits._
+    def rows(uris: (String, String)*) = uris.map { case (u, k) =>
+      (u, k, s"c-$u", null: String, null: String,
+        java.sql.Timestamp.valueOf("2024-03-01 10:00:00"))
+    }.toDF("uri", "key", "cid", "replyParent", "replyRoot", "indexedAt")
+    def append(store: String, candidates: org.apache.spark.sql.DataFrame): Long =
+      Ingest.appendNew(store, candidates, System.nanoTime(), None, _ => Nil)()
+    def stored(store: String) = Ingest.readStore(spark, store)
+      .select("uri", "key").as[(String, String)].collect().toSeq
+
+    // key-partitioned: f1 and f9 hold rows, f2 has no dir yet
+    val store = tmpDir("graft-touched")
+    rows("at://a/1" -> "f1", "at://a/2" -> "f1", "at://a/9" -> "f9")
+      .write.mode("overwrite").partitionBy("key").parquet(store)
+    // a redelivered f1 post (twice in the batch, too), a new f1 post, and
+    // the first post of f2, whose key has no dir yet
+    assert(append(store, rows("at://a/1" -> "f1", "at://a/1" -> "f1",
+      "at://a/3" -> "f1", "at://a/1" -> "f2")) == 2L)
+    assert(stored(store).sorted == Seq("at://a/1" -> "f1", "at://a/1" -> "f2",
+      "at://a/2" -> "f1", "at://a/3" -> "f1", "at://a/9" -> "f9"))
+    assert(Ingest.readStoreKey(spark, store, "f1", "f2", "nofeed").count() == 4L)
+    assert(Ingest.readStoreKey(spark, store, "nofeed").isEmpty)
+
+    // a legacy unpartitioned store has no key= dirs: the dedup reads all of it
+    val legacy = tmpDir("graft-touched-legacy")
+    rows("at://a/1" -> "f1", "at://a/2" -> "f2").write.mode("overwrite").parquet(legacy)
+    assert(Ingest.readStoreKey(spark, legacy, "f1").count() == 2L)
+    assert(append(legacy, rows("at://a/1" -> "f1", "at://a/2" -> "f2",
+      "at://a/5" -> "f1")) == 1L)
+    assert(spark.read.parquet(s"$legacy/key=f1").select("uri").as[String]
+      .collect().toSeq == Seq("at://a/5"))
   }
 
   test("initial backfill honors initPost, skips non-empty feeds, idempotent (T2)") {
@@ -233,14 +315,12 @@ class IngestServeSpec extends SparkSpec {
     // source-metrics contract, pinned EXACTLY: 350 data rows, + 40 for
     // the ONE-TIME first-sighting sample probe (re-reads drain 1 once —
     // the documented r17 trade; the accumulator counting on drains 2-3
-    // adds NOTHING, where a per-drain probe would re-read every drain),
-    // + 10 for drain 3's second branch (once armed, the demoted
-    // condition rides the full-stream crossJoin branch, so the mixed
-    // split scans that drain twice — the "one extra full-stream branch"
-    // cost fanOutScreened documents)
+    // adds NOTHING, where a per-drain probe would re-read every drain).
+    // Drain 3, once armed, reads its 10 rows once: the demoted condition
+    // rides the indexed pass as an every-post ordinal, not a second scan
     val inputRows = q.recentProgress.map(_.numInputRows).sum
-    assert(inputRows == 350L + 40L + 10L,
-      s"gate source-metrics contract drifted: read $inputRows (expect 400)")
+    assert(inputRows == 350L + 40L,
+      s"gate source-metrics contract drifted: read $inputRows (expect 390)")
     q.stop()
     // the memo (same set, same session) must now hold an ARMED verdict
     // demoting the universal literal — no probe handed back
